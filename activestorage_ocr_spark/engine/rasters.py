@@ -1629,6 +1629,8 @@ def _gif_lzw_decode(data: bytes, min_code_size: int) -> bytes:
             if code == end:
                 return bytes(out)
             if prev is None:
+                if code >= len(table):
+                    raise ValueError("corrupt GIF LZW stream: code out of range after CLEAR")
                 entry = table[code]
             elif code < len(table):
                 entry = table[code]

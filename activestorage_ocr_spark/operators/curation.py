@@ -146,21 +146,13 @@ def run_curation_job(
             ),
         )
     )
-    writer_conf = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-    old = {k: spark.conf.get(k, None) for k in writer_conf}
-    for k, v in writer_conf.items():
-        spark.conf.set(k, v)
-    try:
-        clustered = stamped.repartition(n_parts, F.col("part_key"))
-        clustered.write.mode("overwrite").partitionBy("outcome", "part_key").parquet(
-            os.path.join(out_dir, "data")
-        )
-    finally:
-        for k, v in old.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
+    clustered = stamped.repartition(n_parts, F.col("part_key"))
+    (
+        clustered.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("outcome", "part_key")
+        .parquet(os.path.join(out_dir, "data"))
+    )
 
     committed = (
         spark.read.parquet(os.path.join(out_dir, "data"))

@@ -2,20 +2,24 @@
 whole request path (SURVEY.md §3.1 "Spark equivalent"):
 
     scan (url, warc_ts, html, lang)
-      -> size/byte-length skew binning + repartition        [one shuffle]
-      -> mapInArrow(extract_kernel)                          [map-only]
+      -> mapInArrow(pass-1 kernel)      extract small rows, defer giants
+      -> hash exchange on url           spreads the deferred giant tail
+      -> mapInArrow(finish kernel)      extract giants, forward the rest
       -> ok/quarantine split, lineage manifest, sinks
 
-Physical-plan posture (SURVEY.md §4.2): exactly one shuffle (the skew
-repartition, skippable for pre-bucketed inputs); the extraction itself is
-map-only; Catalyst prunes the scan to the four needed columns because the
-kernel is declared over an explicit projection.
+Both kernels build their rows in one place (`_extract_rows`), the only caller
+of `engine.extract.extract_document` here.
+
+Physical-plan posture (SURVEY.md §4.2): one scan and exactly one shuffle (the
+url-hash exchange; ``skew_handling="off"`` drops it and maps directly over
+scan partitions); Catalyst prunes the scan to the four needed columns because
+the kernel is declared over an explicit projection.
 
 Skew handling: a 50 MB page next to 2 KB pages makes task runtimes bimodal and
-can blow Python-worker memory when many giants land in one Arrow batch. We
-bucket rows by log2(byte length) and hash-repartition on (len_bin, salt) so
-each task sees pages of one size class; inside the kernel, incoming Arrow
-batches are re-sliced to a byte budget (zero-copy) before extraction.
+can blow Python-worker memory when many giants land in one Arrow batch. Pass 1
+defers rows above ``giant_bytes`` so the exchange can spread them over many
+tasks; inside both kernels, incoming Arrow batches are re-sliced to a byte
+budget (zero-copy) before extraction.
 """
 
 from __future__ import annotations
@@ -25,26 +29,61 @@ from typing import Any
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql.pandas.types import from_arrow_schema
 
-SPANS_TYPE = "array<struct<start:bigint,end:bigint,kind:string>>"
-STEPS_TYPE = "array<struct<name:string,time_ms:bigint>>"
+#: Output columns of the extraction kernels — the one declaration of the
+#: output schema. Timing fields are excluded from byte-identity comparison
+#: (FIXTURES.md §2).
+_OUTPUT_FIELDS = [
+    pa.field("url", pa.string()),
+    pa.field("warc_ts", pa.timestamp("us", tz="UTC")),
+    pa.field("lang", pa.string()),
+    pa.field("mime", pa.string()),
+    pa.field("extracted_text", pa.string()),
+    pa.field("confidence", pa.float64()),
+    pa.field("engine", pa.string()),
+    pa.field("status", pa.string()),
+    pa.field("error_code", pa.string()),
+    pa.field("warnings", pa.list_(pa.string())),
+    pa.field(
+        "spans",
+        pa.list_(
+            pa.struct(
+                [
+                    pa.field("start", pa.int64()),
+                    pa.field("end", pa.int64()),
+                    pa.field("kind", pa.string()),
+                ]
+            )
+        ),
+    ),
+    pa.field("n_bytes", pa.int64()),
+    pa.field("chars_out", pa.int64()),
+    pa.field("processing_time_ms", pa.int64()),
+    pa.field("preset", pa.string()),
+    pa.field(
+        "step_timings",
+        pa.list_(pa.struct([pa.field("name", pa.string()), pa.field("time_ms", pa.int64())])),
+    ),
+    pa.field("partition_id", pa.int32()),
+]
+_OUTPUT_NAMES = [f.name for f in _OUTPUT_FIELDS]
 
-#: Output schema of the extraction kernel. Timing fields are excluded from
-#: byte-identity comparison (FIXTURES.md §2).
-EXTRACTED_SCHEMA = (
-    "url string, warc_ts timestamp, lang string, mime string, "
-    "extracted_text string, confidence double, engine string, status string, "
-    f"error_code string, warnings array<string>, spans {SPANS_TYPE}, "
-    "n_bytes bigint, chars_out bigint, processing_time_ms bigint, "
-    f"preset string, step_timings {STEPS_TYPE}, partition_id int"
-)
+
+def _arrow_output_schema(with_deferred: bool = False) -> pa.Schema:
+    if with_deferred:
+        return pa.schema(_OUTPUT_FIELDS + [pa.field("deferred_html", pa.binary())])
+    return pa.schema(_OUTPUT_FIELDS)
+
+
+#: Output schema of the extraction pipeline (Spark form of _OUTPUT_FIELDS).
+EXTRACTED_SCHEMA = from_arrow_schema(_arrow_output_schema())
 
 OK_STATUSES = ("ok", "empty")
 
 #: Pass-1 output of single-scan skew routing: EXTRACTED_SCHEMA plus the raw
 #: payload of rows deferred to pass 2 (null for finished rows).
-DEFERRED_SCHEMA = EXTRACTED_SCHEMA + ", deferred_html binary"
+DEFERRED_SCHEMA = from_arrow_schema(_arrow_output_schema(with_deferred=True))
 
 #: kernel re-slices incoming Arrow batches so one slice never exceeds this
 #: many payload bytes (giant-page memory guard; SURVEY.md §7.3).
@@ -102,49 +141,87 @@ def _repo_root() -> str:
     return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _arrow_output_schema(with_deferred: bool = False) -> pa.Schema:
-    fields = _arrow_output_fields()
-    if with_deferred:
-        fields = fields + [pa.field("deferred_html", pa.binary())]
-    return pa.schema(fields)
+def _deferred_result(engine: str, preset: str) -> dict[str, Any]:
+    """A pass-1 placeholder in `extract_document`'s result shape for a row
+    left to pass 2."""
+    return {
+        "mime": None, "extracted_text": None, "confidence": None,
+        "engine": engine, "status": "deferred", "error_code": None,
+        "warnings": [], "spans": [], "processing_time_ms": 0,
+        "preset": preset, "step_timings": [],
+    }
 
 
-def _arrow_output_fields() -> list[pa.Field]:
-    return [
-            pa.field("url", pa.string()),
-            pa.field("warc_ts", pa.timestamp("us", tz="UTC")),
-            pa.field("lang", pa.string()),
-            pa.field("mime", pa.string()),
-            pa.field("extracted_text", pa.string()),
-            pa.field("confidence", pa.float64()),
-            pa.field("engine", pa.string()),
-            pa.field("status", pa.string()),
-            pa.field("error_code", pa.string()),
-            pa.field("warnings", pa.list_(pa.string())),
-            pa.field(
-                "spans",
-                pa.list_(
-                    pa.struct(
-                        [
-                            pa.field("start", pa.int64()),
-                            pa.field("end", pa.int64()),
-                            pa.field("kind", pa.string()),
-                        ]
-                    )
-                ),
-            ),
-            pa.field("n_bytes", pa.int64()),
-            pa.field("chars_out", pa.int64()),
-            pa.field("processing_time_ms", pa.int64()),
-            pa.field("preset", pa.string()),
-            pa.field(
-                "step_timings",
-                pa.list_(
-                    pa.struct([pa.field("name", pa.string()), pa.field("time_ms", pa.int64())])
-                ),
-            ),
-            pa.field("partition_id", pa.int32()),
-        ]
+def _extract_rows(
+    sub: pa.RecordBatch,
+    target: pa.Schema,
+    payload_col: str,
+    pid: int,
+    *,
+    engine: str,
+    preset: str | None,
+    max_bytes: int,
+    default_language: str | None,
+    forced_languages: str | None,
+    timeout_ms: int | None,
+    defer_over: int | None = None,
+) -> pa.RecordBatch:
+    """Extract every row of ``sub`` and build the output batch against
+    ``target`` — the one place both passes turn `extract_document` results
+    into output columns. A ``preset`` input column overrides ``preset`` per
+    row (P5, `rust/src/server.rs:201-213`). Payloads larger than
+    ``defer_over`` are not extracted: they get a ``status='deferred'`` row
+    carrying the raw payload in ``deferred_html`` for pass 2."""
+    from ..engine.extract import extract_document
+
+    payloads = sub.column(payload_col).to_pylist()
+    langs = sub.column("lang").to_pylist()
+    if "preset" in sub.schema.names:
+        presets = [p or preset for p in sub.column("preset").to_pylist()]
+    else:
+        presets = [preset] * sub.num_rows
+    deferred = [
+        defer_over is not None and p is not None and len(p) > defer_over for p in payloads
+    ]
+    results = [
+        _deferred_result(engine, row_preset)
+        if d
+        else extract_document(
+            payload, engine=engine, preset=row_preset, max_bytes=max_bytes,
+            languages=forced_languages or _lang_request(lg) or default_language,
+            timeout_ms=timeout_ms,
+        )
+        for lg, payload, row_preset, d in zip(langs, payloads, presets, deferred)
+    ]
+    cols: dict[str, Any] = {
+        "url": sub.column("url"),
+        "warc_ts": sub.column("warc_ts"),
+        "lang": sub.column("lang"),
+        "spans": [
+            [{"start": s, "end": e, "kind": k} for s, e, k in r["spans"]] for r in results
+        ],
+        "n_bytes": [len(p) if p is not None else 0 for p in payloads],
+        "chars_out": [len(r["extracted_text"] or "") for r in results],
+        "step_timings": [
+            [{"name": n, "time_ms": t} for n, t in r["step_timings"]] for r in results
+        ],
+        "partition_id": [pid] * sub.num_rows,
+        "deferred_html": [p if d else None for p, d in zip(payloads, deferred)],
+    }
+    arrays = []
+    for f in target:
+        col = cols[f.name] if f.name in cols else [r[f.name] for r in results]
+        arrays.append(
+            col.cast(f.type) if isinstance(col, pa.Array) else pa.array(col, type=f.type)
+        )
+    return pa.RecordBatch.from_arrays(arrays, schema=target)
+
+
+def _partition_id() -> int:
+    from pyspark import TaskContext
+
+    tc = TaskContext.get()
+    return tc.partitionId() if tc is not None else -1
 
 
 def make_extract_kernel(
@@ -156,7 +233,7 @@ def make_extract_kernel(
     forced_languages: str | None = None,
     timeout_ms: int | None = None,
 ):
-    """Build the mapInArrow kernel. All per-document work happens in
+    """Build the pass-1 mapInArrow kernel. All per-document work happens in
     `engine.extract.extract_document` — the same function the golden oracle
     runs, so byte-identity is structural (SURVEY.md §7.3). The heavy imports
     happen once per Python worker at first batch (model-warm-once analog,
@@ -169,85 +246,16 @@ def make_extract_kernel(
     routing — see `extract_pages`)."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # per-worker init (amortized across batches)
-        from pyspark import TaskContext
-
-        from ..engine.extract import extract_document
-
         out_schema = _arrow_output_schema(with_deferred=defer_over is not None)
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-
+        pid = _partition_id()
         for batch in batches:
             for sub in _slice_by_bytes(batch, KERNEL_SLICE_BYTES):
-                urls = sub.column("url").to_pylist()
-                ts = sub.column("warc_ts")
-                langs = sub.column("lang").to_pylist()
-                payloads = sub.column("html").to_pylist()
-                # P5 per-request preset override (`rust/src/server.rs:201-213`):
-                # an optional `preset` input column overrides the job default
-                if "preset" in sub.schema.names:
-                    presets = [p or preset for p in sub.column("preset").to_pylist()]
-                else:
-                    presets = [preset] * len(urls)
-                rows: dict[str, list[Any]] = {f.name: [] for f in out_schema}
-                for u, lg, payload, row_preset in zip(urls, langs, payloads, presets):
-                    if defer_over is not None and payload is not None and len(payload) > defer_over:
-                        rows["url"].append(u)
-                        rows["lang"].append(lg)
-                        rows["mime"].append(None)
-                        rows["extracted_text"].append(None)
-                        rows["confidence"].append(None)
-                        rows["engine"].append(engine)
-                        rows["status"].append("deferred")
-                        rows["error_code"].append(None)
-                        rows["warnings"].append([])
-                        rows["spans"].append([])
-                        rows["n_bytes"].append(len(payload))
-                        rows["chars_out"].append(0)
-                        rows["processing_time_ms"].append(0)
-                        rows["preset"].append(row_preset)
-                        rows["step_timings"].append([])
-                        rows["partition_id"].append(pid)
-                        rows["deferred_html"].append(payload)
-                        continue
-                    r = extract_document(
-                        payload, engine=engine, preset=row_preset,
-                        max_bytes=max_bytes,
-                        languages=forced_languages
-                        or _lang_request(lg)
-                        or default_language,
-                        timeout_ms=timeout_ms,
-                    )
-                    rows["url"].append(u)
-                    rows["lang"].append(lg)
-                    rows["mime"].append(r["mime"])
-                    rows["extracted_text"].append(r["extracted_text"])
-                    rows["confidence"].append(r["confidence"])
-                    rows["engine"].append(r["engine"])
-                    rows["status"].append(r["status"])
-                    rows["error_code"].append(r["error_code"])
-                    rows["warnings"].append(r["warnings"])
-                    rows["spans"].append(
-                        [{"start": s, "end": e, "kind": k} for s, e, k in r["spans"]]
-                    )
-                    rows["n_bytes"].append(len(payload) if payload is not None else 0)
-                    rows["chars_out"].append(len(r["extracted_text"]))
-                    rows["processing_time_ms"].append(r["processing_time_ms"])
-                    rows["preset"].append(r["preset"])
-                    rows["step_timings"].append(
-                        [{"name": n, "time_ms": t} for n, t in r["step_timings"]]
-                    )
-                    rows["partition_id"].append(pid)
-                    if defer_over is not None:
-                        rows["deferred_html"].append(None)
-                arrays = []
-                for f in out_schema:
-                    if f.name == "warc_ts":
-                        arrays.append(ts.cast(f.type))
-                    else:
-                        arrays.append(pa.array(rows[f.name], type=f.type))
-                yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+                yield _extract_rows(
+                    sub, out_schema, "html", pid, engine=engine, preset=preset,
+                    max_bytes=max_bytes, default_language=default_language,
+                    forced_languages=forced_languages, timeout_ms=timeout_ms,
+                    defer_over=defer_over,
+                )
 
     return kernel
 
@@ -264,75 +272,31 @@ def make_finish_kernel(
 
     Finished rows (``deferred_html`` null) pass through as zero-copy Arrow
     slices — no per-row Python touches them. Deferred rows run the same
-    `extract_document` kernel on their raw payload. The per-row ``preset``
-    resolved in pass 1 rides along in the ``preset`` output column."""
+    `_extract_rows` on their raw payload, with the per-row ``preset``
+    resolved in pass 1."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
-        from pyspark import TaskContext
 
-        from ..engine.extract import extract_document
-
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        out_names = [f.name for f in _arrow_output_fields()]
-
+        pid = _partition_id()
         for batch in batches:
             for sub in _slice_by_bytes(batch, KERNEL_SLICE_BYTES, payload_col="deferred_html"):
                 mask = pc.is_valid(sub.column("deferred_html"))
-                n_deferred = pc.sum(mask).as_py() or 0
-                if n_deferred == 0:
-                    yield sub.select(out_names)
+                if not pc.any(mask).as_py():
+                    yield sub.select(_OUTPUT_NAMES)
                     continue
                 finished = sub.filter(pc.invert(mask))
                 if finished.num_rows:
-                    yield finished.select(out_names)
+                    yield finished.select(_OUTPUT_NAMES)
                 deferred = sub.filter(mask)
                 # mirror the incoming Arrow types exactly (they round-tripped
                 # through Spark's shuffle) so all yielded batches agree
-                target = deferred.select(out_names).schema
-                urls = deferred.column("url").to_pylist()
-                ts = deferred.column("warc_ts")
-                langs = deferred.column("lang").to_pylist()
-                payloads = deferred.column("deferred_html").to_pylist()
-                presets = deferred.column("preset").to_pylist()
-                rows: dict[str, list[Any]] = {n: [] for n in out_names}
-                for u, lg, payload, row_preset in zip(urls, langs, payloads, presets):
-                    r = extract_document(
-                        payload, engine=engine, preset=row_preset,
-                        max_bytes=max_bytes,
-                        languages=forced_languages
-                        or _lang_request(lg)
-                        or default_language,
-                        timeout_ms=timeout_ms,
-                    )
-                    rows["url"].append(u)
-                    rows["lang"].append(lg)
-                    rows["mime"].append(r["mime"])
-                    rows["extracted_text"].append(r["extracted_text"])
-                    rows["confidence"].append(r["confidence"])
-                    rows["engine"].append(r["engine"])
-                    rows["status"].append(r["status"])
-                    rows["error_code"].append(r["error_code"])
-                    rows["warnings"].append(r["warnings"])
-                    rows["spans"].append(
-                        [{"start": s, "end": e, "kind": k} for s, e, k in r["spans"]]
-                    )
-                    rows["n_bytes"].append(len(payload) if payload is not None else 0)
-                    rows["chars_out"].append(len(r["extracted_text"]))
-                    rows["processing_time_ms"].append(r["processing_time_ms"])
-                    rows["preset"].append(r["preset"])
-                    rows["step_timings"].append(
-                        [{"name": n, "time_ms": t} for n, t in r["step_timings"]]
-                    )
-                    rows["partition_id"].append(pid)
-                arrays = []
-                for f in target:
-                    if f.name == "warc_ts":
-                        arrays.append(ts.cast(f.type))
-                    else:
-                        arrays.append(pa.array(rows[f.name], type=f.type))
-                yield pa.RecordBatch.from_arrays(arrays, schema=target)
+                yield _extract_rows(
+                    deferred, deferred.select(_OUTPUT_NAMES).schema, "deferred_html", pid,
+                    engine=engine, preset=None, max_bytes=max_bytes,
+                    default_language=default_language,
+                    forced_languages=forced_languages, timeout_ms=timeout_ms,
+                )
 
     return kernel
 
@@ -364,14 +328,6 @@ def _slice_by_bytes(
         yield batch.slice(start, batch.num_rows - start)
 
 
-def with_length_bins(df: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Byte-length-binned skew columns: ``len_bin`` = log2 bucket of payload
-    size, ``salt`` = url-hash bucket (north rule: salted, url-hash-bucketed)."""
-    return df.withColumn("len_bin", F.ceil(F.log2(F.length("html") + F.lit(2)))).withColumn(
-        "salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets))
-    )
-
-
 #: documents larger than this take the shuffled giant path (~p99 of a
 #: Common-Crawl-style size distribution at our synthetic scale).
 GIANT_BYTES = 64 * 1024
@@ -386,8 +342,7 @@ def extract_pages(
     default_language: str | None = None,
     languages: str | None = None,
     repartition: int | None = None,
-    salt_buckets: int = 64,
-    skew_handling: bool | str = "giants",
+    skew_handling: str = "giants",
     giant_bytes: int = GIANT_BYTES,
     doc_timeout_ms: int | None = None,
 ) -> DataFrame:
@@ -405,15 +360,12 @@ def extract_pages(
       a side column. One hash exchange on ``url`` then spreads the deferred
       giants uniformly across the cluster (finished rows ride along as
       extracted text, not raw html), and pass 2 finishes the giants while
-      zero-copy forwarding everything else. At 10^12-document scale this
-      reads the table ONCE and shuffles extracted text (~10-20% of input)
-      plus the ~1-2% giant tail — vs 2x full scans (the old fork-by-filter
-      realization) or a 100% raw-payload shuffle (``"full"``). No task
-      accumulates many giants; in-kernel Arrow batch re-slicing
-      (KERNEL_SLICE_BYTES) guards worker memory in both passes.
-    * ``"full"`` / ``True`` — byte-length-bin + salt repartition of every
-      row (for inputs with pathological layout, e.g. sorted by size).
-    * ``"off"`` / ``False`` — map directly over scan partitions.
+      zero-copy forwarding everything else. The table is read ONCE and the
+      exchange carries extracted text (~10-20% of input) plus the ~1-2%
+      giant tail. No task accumulates many giants; in-kernel Arrow batch
+      re-slicing (KERNEL_SLICE_BYTES) guards worker memory in both passes.
+    * ``"off"`` — map directly over scan partitions (no exchange; streaming
+      and the fixture-backed queries use it).
 
     Exchange width: when ``repartition`` is not pinned, the hash exchange
     carries no explicit count — AQE sizes it to the data (coalescing tiny
@@ -431,6 +383,8 @@ def extract_pages(
     crawl ``lang`` annotation; when None, each row's annotation maps to a
     request and unknown annotations fall back to ``default_language``.
     """
+    if skew_handling not in ("giants", "off"):
+        raise ValueError(f"unknown skew_handling mode: {skew_handling!r}")
     ensure_workers_can_import(df.sparkSession)
     # unset knobs resolve from env config ON THE DRIVER (configuration.rb /
     # main.rs clap-env analog, engine/config.py). Env is only read — and
@@ -463,44 +417,20 @@ def extract_pages(
     if "preset" in df.columns:
         cols.append("preset")
     proj = df.select(*cols)
-    kernel = make_extract_kernel(
-        engine, preset, max_bytes,
+    opts = dict(
         default_language=default_language, forced_languages=languages,
         timeout_ms=doc_timeout_ms,
     )
-    mode = {True: "full", False: "off"}.get(skew_handling, skew_handling)
-
-    def _repart(frame, *cols):
-        # explicit width when the caller pinned one; otherwise hash-
-        # repartition WITHOUT a count so AQE sizes the exchange to the data
-        # (parallelism*4 fixed widths measured ~1s of pure scheduling
-        # overhead on small inputs, and AQE splits skewed partitions at
-        # scale anyway)
-        if repartition:
-            return frame.repartition(repartition, *cols)
-        return frame.repartition(*cols)
-
-    if mode == "off":
+    if skew_handling == "off":
+        kernel = make_extract_kernel(engine, preset, max_bytes, **opts)
         return proj.mapInArrow(kernel, EXTRACTED_SCHEMA)
-    if mode == "full":
-        binned = (
-            _repart(with_length_bins(proj, salt_buckets), "len_bin", "salt")
-            .drop("len_bin", "salt")
-        )
-        return binned.mapInArrow(kernel, EXTRACTED_SCHEMA)
-    if mode != "giants":
-        raise ValueError(f"unknown skew_handling mode: {skew_handling!r}")
 
     # single scan: pass 1 extracts the small rows and defers giants (raw
     # payload in deferred_html); one url-hash exchange spreads the giant
     # tail; pass 2 finishes giants and zero-copy-forwards the rest. The
     # giant/normal decision is made per row inside the kernel, so NULL
     # payloads never hit three-valued filter logic.
-    pass1_kernel = make_extract_kernel(
-        engine, preset, max_bytes, defer_over=giant_bytes,
-        default_language=default_language, forced_languages=languages,
-        timeout_ms=doc_timeout_ms,
-    )
+    #
     # r7 note (guide §4.1): two split alternatives were measured at sf1.0
     # and REJECTED — (a) filtering the exchange output into a JVM-only
     # finished branch + a Python giants branch runs pass 1 twice
@@ -510,16 +440,20 @@ def extract_pages(
     # than the forwarding it saves (9.0s -> 11.1s). The zero-copy
     # batch-level forward inside the finish kernel remains the cheapest
     # realization of "finished rows ride along".
-    pass1 = proj.mapInArrow(pass1_kernel, DEFERRED_SCHEMA)
-    redistributed = _repart(pass1, F.col("url"))
-    return redistributed.mapInArrow(
-        make_finish_kernel(
-            engine, max_bytes,
-            default_language=default_language, forced_languages=languages,
-            timeout_ms=doc_timeout_ms,
-        ),
-        EXTRACTED_SCHEMA,
+    pass1 = proj.mapInArrow(
+        make_extract_kernel(engine, preset, max_bytes, defer_over=giant_bytes, **opts),
+        DEFERRED_SCHEMA,
     )
+    # explicit width when the caller pinned one; otherwise hash-repartition
+    # WITHOUT a count so AQE sizes the exchange to the data (parallelism*4
+    # fixed widths measured ~1s of pure scheduling overhead on small inputs,
+    # and AQE splits skewed partitions at scale anyway)
+    if repartition:
+        redistributed = pass1.repartition(repartition, F.col("url"))
+    else:
+        redistributed = pass1.repartition(F.col("url"))
+    finish = make_finish_kernel(engine, max_bytes, **opts)
+    return redistributed.mapInArrow(finish, EXTRACTED_SCHEMA)
 
 
 def split_quarantine(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:

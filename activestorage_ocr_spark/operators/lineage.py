@@ -135,30 +135,20 @@ def run_extraction_job(
             ),
         )
     )
-    writer_conf = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-    # conf.get(k, None) is None when the conf was never explicitly set;
-    # restoring must then UNSET it, not leave 'dynamic' leaking into the
-    # caller's session (it changes overwrite semantics globally)
-    old = {k: spark.conf.get(k, None) for k in writer_conf}
-    for k, v in writer_conf.items():
-        spark.conf.set(k, v)
-    try:
-        # Write-layout exchange: without it every task fans out into ~all
-        # part_key dirs (tasks x parts tiny files — measured 8k files and
-        # 60s of footer overhead at 100k docs). Clustering by part_key means
-        # each partition dir is written by exactly ONE task: n_parts*2 files
-        # total, and the exchange carries extracted text, not raw html.
-        clustered = stamped.repartition(n_parts, F.col("part_key"))
-        # idempotent per-part data commit (overwrite only touched partitions)
-        clustered.write.mode("overwrite").partitionBy("outcome", "part_key").parquet(
-            os.path.join(out_dir, "data")
-        )
-    finally:
-        for k, v in old.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
+    # Write-layout exchange: without it every task fans out into ~all
+    # part_key dirs (tasks x parts tiny files — measured 8k files and
+    # 60s of footer overhead at 100k docs). Clustering by part_key means
+    # each partition dir is written by exactly ONE task: n_parts*2 files
+    # total, and the exchange carries extracted text, not raw html.
+    clustered = stamped.repartition(n_parts, F.col("part_key"))
+    # idempotent per-part data commit: dynamic overwrite replaces only the
+    # touched partitions, set per write so the session conf is never changed
+    (
+        clustered.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("outcome", "part_key")
+        .parquet(os.path.join(out_dir, "data"))
+    )
 
     # Manifest commit happens only after the data commit succeeded, derived
     # from the just-committed parquet: partition-pruned to this run's
@@ -226,6 +216,7 @@ def read_quarantine(spark: SparkSession, out_dir: str) -> DataFrame:
             pass
     from .extraction import EXTRACTED_SCHEMA
 
-    return spark.createDataFrame(
-        [], EXTRACTED_SCHEMA + ", processed_at timestamp, run_id string, part_key int"
+    return spark.createDataFrame([], EXTRACTED_SCHEMA).selectExpr(
+        "*", "CAST(NULL AS timestamp) AS processed_at", "CAST(NULL AS string) AS run_id",
+        "CAST(NULL AS int) AS part_key",
     )

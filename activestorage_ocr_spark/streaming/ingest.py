@@ -18,7 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.extraction import EXTRACTED_SCHEMA, make_extract_kernel
+from ..operators.extraction import extract_pages
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -36,26 +36,22 @@ def read_pages_stream(
 def extract_pages_stream(
     pages: DataFrame,
     *,
-    engine: str = "pixelocr",
-    preset: str = "minimal",
-    max_bytes: int = 52_428_800,
+    engine: str | None = None,
+    preset: str | None = None,
+    max_bytes: int | None = None,
     doc_timeout_ms: int | None = None,
 ) -> DataFrame:
-    """Streaming variant of the extraction pipeline: same kernel, map-only
-    (no repartition — a streaming micro-batch is one file group; the
-    in-kernel byte-budget slicing still guards memory). The per-document
-    wall budget matters MORE here than in batch: a straggling document
-    stalls the whole micro-batch and every trigger behind it. None resolves
-    from env config (ASOS_OCR_DOC_TIMEOUT_MS, default 30 s)."""
-    from ..engine.config import EngineConfig
-    from ..operators.extraction import ensure_workers_can_import
-
-    ensure_workers_can_import(pages.sparkSession)
-    if doc_timeout_ms is None:
-        doc_timeout_ms = EngineConfig.from_env().doc_timeout_ms
-    proj = pages.select("url", "warc_ts", "html", "lang")
-    kernel = make_extract_kernel(engine, preset, max_bytes, timeout_ms=doc_timeout_ms)
-    return proj.mapInArrow(kernel, EXTRACTED_SCHEMA)
+    """Streaming variant of the extraction pipeline: `extract_pages` with
+    ``skew_handling="off"`` (no exchange — a streaming micro-batch is one
+    file group; the in-kernel byte-budget slicing still guards memory). The
+    per-document wall budget matters MORE here than in batch: a straggling
+    document stalls the whole micro-batch and every trigger behind it.
+    Unset arguments resolve from env config (ASOS_OCR_*) exactly as in
+    batch."""
+    return extract_pages(
+        pages, engine=engine, preset=preset, max_bytes=max_bytes,
+        doc_timeout_ms=doc_timeout_ms, skew_handling="off",
+    )
 
 
 def start_extraction_stream(

@@ -431,6 +431,29 @@ class TestGifInterlace:
         assert np.array_equal(out, img)
 
 
+class TestGifCorruptLzw:
+    # 2x2 GIF, min code size 2 (CLEAR=4, END=5, 3-bit codes): the first data
+    # code is 7, past the 6-entry table a CLEAR leaves
+    CORRUPT = (
+        b"GIF87a" + bytes([2, 0, 2, 0, 0x80, 0, 0]) + b"\x00\x00\x00\xff\xff\xff"
+        + b"\x2c" + bytes([0, 0, 0, 0, 2, 0, 2, 0, 0]) + b"\x02\x01\x2f\x00\x3b"
+    )
+
+    def test_out_of_range_first_code_is_a_decode_error(self):
+        with pytest.raises(ValueError, match="LZW"):
+            rasters.decode_gif(self.CORRUPT)
+
+    def test_row_gets_the_truncated_gif_error_code(self):
+        from activestorage_ocr_spark.engine.extract import extract_document
+
+        gif = rasters.encode_gif(rasters.render_text("GIF 42", scale=2))
+        truncated = extract_document(gif[: len(gif) // 2])
+        corrupt = extract_document(self.CORRUPT)
+        assert corrupt["mime"] == "image/gif"
+        assert corrupt["error_code"] == truncated["error_code"] == "PROCESSING_ERROR"
+        assert corrupt["warnings"][0].startswith("ValueError")
+
+
 def _reorder_interlaced(img):
     rows = []
     for start, step in ((0, 8), (4, 8), (2, 4), (1, 2)):

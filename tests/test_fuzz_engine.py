@@ -4,6 +4,8 @@ O7 (`analyzer.rb:52-55`): no payload may ever raise — a 10^12-row job cannot
 die on one document. Plus invariants: confidence in [0,1], mime vocabulary
 closed, spans well-formed, determinism."""
 
+import os
+
 from hypothesis import given, settings, strategies as st
 
 from activestorage_ocr_spark.engine import mime as mimex
@@ -95,12 +97,21 @@ def test_vp8l_decoder_total(payload):
     assert img.ndim == 3
 
 
+_REAL_JPEG = os.path.join(
+    os.path.dirname(__file__), "data", "arithjpeg", "text_seq_gray_rst2.jpg"
+)
+
+
 @settings(max_examples=60, deadline=None)
-@given(st.integers(min_value=2, max_value=6000), st.integers(min_value=0, max_value=255))
+@given(
+    st.integers(min_value=2, max_value=os.path.getsize(_REAL_JPEG)),
+    st.integers(min_value=0, max_value=255),
+)
 def test_real_jpeg_truncations_total(cut, fill):
     from activestorage_ocr_spark.engine import jpegx
 
-    data = open("/root/reference/rust/tests/fixtures/sample_text.jpg", "rb").read()
+    with open(_REAL_JPEG, "rb") as f:
+        data = f.read()
     mutated = data[:cut] + bytes([fill]) * min(8, max(0, len(data) - cut))
     try:
         jpegx.decode_jpeg(mutated)

@@ -20,7 +20,7 @@ class TestNullPayloadRow:
             ("nil", dt.datetime(2025, 1, 1), None, None, "en"),
         ]
         df = spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary, text string, lang string")
-        for mode in ("giants", "full", "off"):
+        for mode in ("giants", "off"):
             out = {r.url: r.status for r in extract_pages(df, skew_handling=mode).collect()}
             assert out == {"ok": "ok", "nil": "INVALID_REQUEST"}, mode
 
@@ -73,10 +73,17 @@ class TestMimeSniffStrictness:
 
 class TestOverwriteModeRestored:
     def test_session_conf_not_leaked(self, spark, corpus_dir_200, tmp_path):
+        from activestorage_ocr_spark.operators.curation import run_curation_job
         from activestorage_ocr_spark.operators.lineage import run_extraction_job
 
         key = "spark.sql.sources.partitionOverwriteMode"
         before = spark.conf.get(key, None)
         pages = spark.read.parquet(f"{corpus_dir_200}/pages.parquet").limit(20)
         run_extraction_job(spark, pages, str(tmp_path / "o"), run_id="x", n_parts=2, max_bytes=262_144)
+        assert spark.conf.get(key, None) == before
+        docs = spark.createDataFrame(
+            [(i, f"plain words of curation document number {i} here", "en") for i in range(8)],
+            "doc_id long, text string, lang string",
+        )
+        run_curation_job(spark, docs, str(tmp_path / "c"), run_id="x", n_parts=2)
         assert spark.conf.get(key, None) == before

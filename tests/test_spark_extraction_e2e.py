@@ -122,7 +122,7 @@ class TestPlanShape:
 
     def test_no_shuffle_when_skew_handling_off(self, spark, corpus_dir_200):
         pages = spark.read.parquet(f"{corpus_dir_200}/pages.parquet")
-        plan = extract_pages(pages, skew_handling=False)._jdf.queryExecution().executedPlan().toString()
+        plan = extract_pages(pages, skew_handling="off")._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
 
     def test_giants_mode_scans_input_once(self, spark, corpus_dir_200):
@@ -178,3 +178,35 @@ class TestSkewRouting:
         off_pids = {r.partition_id for r in off.select("partition_id").collect()}
         assert len(off_pids) == 1
         assert len(small_pids) >= 1
+
+
+class TestOutputSchema:
+    #: the output schema in DDL: the reference the schemas derived from the
+    #: kernel's Arrow field list must match
+    DDL = (
+        "url string, warc_ts timestamp, lang string, mime string, "
+        "extracted_text string, confidence double, engine string, status string, "
+        "error_code string, warnings array<string>, "
+        "spans array<struct<start:bigint,end:bigint,kind:string>>, "
+        "n_bytes bigint, chars_out bigint, processing_time_ms bigint, "
+        "preset string, step_timings array<struct<name:string,time_ms:bigint>>, "
+        "partition_id int"
+    )
+
+    def test_derived_schema_matches_ddl(self, spark):
+        from activestorage_ocr_spark.operators.extraction import (
+            DEFERRED_SCHEMA,
+            EXTRACTED_SCHEMA,
+        )
+
+        assert spark.createDataFrame([], self.DDL).schema == EXTRACTED_SCHEMA
+        deferred = spark.createDataFrame([], self.DDL + ", deferred_html binary").schema
+        assert deferred == DEFERRED_SCHEMA
+
+
+class TestSkewModes:
+    @pytest.mark.parametrize("mode", ["full", True, False])
+    def test_only_giants_and_off_accepted(self, spark, corpus_dir_200, mode):
+        pages = spark.read.parquet(f"{corpus_dir_200}/pages.parquet")
+        with pytest.raises(ValueError, match="skew_handling"):
+            extract_pages(pages, skew_handling=mode)

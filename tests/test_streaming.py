@@ -34,6 +34,18 @@ class TestStreamingExtraction:
         j = got.join(golden.select("url", F.col("extracted_text").alias("want")), "url")
         assert j.filter(~F.col("extracted_text").eqNullSafe(F.col("want"))).count() == 0
 
+    def test_unset_arguments_resolve_from_env(self, spark, landing, tmp_path, monkeypatch):
+        # streaming resolves unset knobs from ASOS_OCR_* exactly as batch does
+        from activestorage_ocr_spark.engine import config
+
+        monkeypatch.setenv(config.ENV_PRESET, "aggressive")
+        d, _ = landing
+        out = str(tmp_path / "out")
+        q = ingest.start_extraction_stream(spark, d, out, str(tmp_path / "ck"), max_bytes=262_144)
+        q.awaitTermination(120)
+        got = spark.read.parquet(out).select("preset").distinct().collect()
+        assert [r.preset for r in got] == ["aggressive"]
+
     def test_restart_is_exactly_once(self, spark, landing, tmp_path):
         d, pages = landing
         out = str(tmp_path / "out")
