@@ -1688,31 +1688,36 @@ def encode_gif(gray: np.ndarray) -> bytes:
 def decode_gif(data: bytes) -> np.ndarray:
     if data[:4] != b"GIF8":
         raise ValueError("not a GIF")
-    w, h, flags = struct.unpack("<HHB", data[6:11])
+    pos = 6
+
+    def take(n: int) -> bytes:
+        # every read is bounds-checked: a truncated stream is a ValueError
+        nonlocal pos
+        if pos + n > len(data):
+            raise ValueError("truncated GIF")
+        pos += n
+        return data[pos - n : pos]
+
+    w, h, flags, _bg, _aspect = struct.unpack("<HHBBB", take(7))
     if w == 0 or h == 0 or w * h > 64_000_000:
         raise ValueError(f"GIF {w}x{h} exceeds the 64MP decode guard")
-    pos = 13
     palette = None
     if flags & 0x80:
         size = 2 << (flags & 0x07)
-        palette = np.frombuffer(data[pos : pos + size * 3], dtype=np.uint8).reshape(size, 3)
-        pos += size * 3
+        palette = np.frombuffer(take(size * 3), dtype=np.uint8).reshape(size, 3)
     while pos < len(data):
-        b = data[pos]
+        b = take(1)[0]
         if b == 0x2C:  # image descriptor
-            _x, _y, iw, ih, iflags = struct.unpack("<HHHHB", data[pos + 1 : pos + 10])
-            pos += 10
+            _x, _y, iw, ih, iflags = struct.unpack("<HHHHB", take(9))
             if iflags & 0x80:
                 size = 2 << (iflags & 0x07)
-                palette = np.frombuffer(data[pos : pos + size * 3], dtype=np.uint8).reshape(size, 3)
-                pos += size * 3
-            min_code = data[pos]
-            pos += 1
+                palette = np.frombuffer(take(size * 3), dtype=np.uint8).reshape(size, 3)
+            if palette is None:
+                raise ValueError("GIF has no color table")
+            min_code = take(1)[0]
             lzw = bytearray()
-            while data[pos] != 0:
-                ln = data[pos]
-                lzw += data[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
+            while ln := take(1)[0]:
+                lzw += take(ln)
             idx = np.frombuffer(_gif_lzw_decode(bytes(lzw), min_code)[: iw * ih], dtype=np.uint8)
             rgb = palette[np.minimum(idx, len(palette) - 1)].reshape(ih, iw, 3)
             if iflags & 0x40:  # interlaced: rows arrive in 4-pass order
@@ -1724,11 +1729,10 @@ def decode_gif(data: bytes) -> np.ndarray:
                     r += n
                 rgb = out
             return rgb_to_gray(rgb)
-        elif b == 0x21:  # extension
-            pos += 2
-            while data[pos] != 0:
-                pos += 1 + data[pos]
-            pos += 1
+        elif b == 0x21:  # extension: label, then sub-blocks
+            take(1)
+            while ln := take(1)[0]:
+                take(ln)
         elif b == 0x3B:
             break
         else:

@@ -45,19 +45,15 @@ def main() -> None:
     ap.add_argument("--master", default=None, help="override (local smoke); cluster runs set the master via spark-submit")
 
     args = ap.parse_args()
-    from pyspark.sql import SparkSession
-
     from activestorage_ocr_spark.operators import curation
+    from activestorage_ocr_spark.sources.session import build_session
 
     if args.master:
-        spark = (
-            SparkSession.builder.master(args.master)
-            .appName(f"curate-{args.run_id}")
-            .config("spark.sql.shuffle.partitions", "32")
-            .config("spark.sql.session.timeZone", "UTC")
-            .getOrCreate()
-        )
+        spark = build_session(master=args.master, app_name=f"curate-{args.run_id}")
     else:
+        # under spark-submit the master/conf come from the submit command
+        from pyspark.sql import SparkSession
+
         spark = SparkSession.builder.appName(f"curate-{args.run_id}").getOrCreate()
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 

@@ -453,6 +453,22 @@ class TestGifCorruptLzw:
         assert corrupt["error_code"] == truncated["error_code"] == "PROCESSING_ERROR"
         assert corrupt["warnings"][0].startswith("ValueError")
 
+    def test_every_truncation_is_a_decode_error(self):
+        gif = rasters.encode_gif(rasters.render_text("GIF 42", scale=2))
+        # only the trailer byte may go: the image is complete without it
+        for cut in range(len(gif) - 1):
+            with pytest.raises(ValueError):
+                rasters.decode_gif(gif[:cut])
+        np.testing.assert_array_equal(rasters.decode_gif(gif[:-1]), rasters.decode_gif(gif))
+
+    def test_missing_color_table_is_a_decode_error(self):
+        no_palette = (
+            b"GIF87a" + bytes([2, 0, 2, 0, 0, 0, 0])
+            + b"\x2c" + bytes([0, 0, 0, 0, 2, 0, 2, 0, 0]) + b"\x02\x01\x44\x00\x3b"
+        )
+        with pytest.raises(ValueError, match="color table"):
+            rasters.decode_gif(no_palette)
+
 
 def _reorder_interlaced(img):
     rows = []

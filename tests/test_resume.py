@@ -1,9 +1,13 @@
 """Checkpoint/resume tests: kill-after-partial-commit -> resume -> output
-equals a single-run golden, exactly once per url (SURVEY.md §5.2)."""
+equals a single-run golden, exactly once per url (SURVEY.md §5.2). The
+commit-path tests run both jobs that commit through `lineage.commit_parts`."""
+
+from typing import Callable, NamedTuple
 
 import pyspark.sql.functions as F
 import pytest
 
+from activestorage_ocr_spark.operators import curation
 from activestorage_ocr_spark.operators import lineage as ln
 
 N_PARTS = 8
@@ -13,6 +17,43 @@ MAX_BYTES = 262_144
 @pytest.fixture()
 def pages(spark, corpus_dir_200):
     return spark.read.parquet(f"{corpus_dir_200}/pages.parquet")
+
+
+@pytest.fixture()
+def docs(spark):
+    # 40 docs in 20 exact-duplicate pairs: both outcomes get rows
+    return spark.createDataFrame(
+        [(i, f"plain readable words of curation document number {i // 2} here", "en")
+         for i in range(40)],
+        "doc_id long, text string, lang string",
+    )
+
+
+class Job(NamedTuple):
+    run: Callable  # (spark, input, out, **kw) -> summary dict
+    input_fixture: str
+    key: str
+    read_ok: Callable
+    read_not_ok: Callable
+
+
+JOBS = {
+    "extraction": Job(
+        lambda spark, df, out, n_parts=N_PARTS, **kw: ln.run_extraction_job(
+            spark, df, out, n_parts=n_parts, max_bytes=MAX_BYTES, **kw),
+        "pages", "url", ln.read_output, ln.read_quarantine,
+    ),
+    "curation": Job(
+        lambda spark, df, out, n_parts=N_PARTS, **kw: curation.run_curation_job(
+            spark, df, out, n_parts=n_parts, **kw),
+        "docs", "doc_id", curation.read_curated, curation.read_rejected,
+    ),
+}
+
+
+@pytest.fixture(params=sorted(JOBS))
+def job(request):
+    return JOBS[request.param]
 
 
 class TestResume:
@@ -54,10 +95,11 @@ class TestResume:
         by_run = {r.run_id: r.cnt for r in m2.groupBy("run_id").agg(F.count("*").alias("cnt")).collect()}
         assert by_run == {"run-1": 3, "run-2": N_PARTS - 3}
 
-    def test_rerun_after_complete_is_noop(self, spark, pages, tmp_path):
+    def test_rerun_after_complete_is_noop(self, spark, job, request, tmp_path):
         out = str(tmp_path / "out")
-        ln.run_extraction_job(spark, pages, out, run_id="a", n_parts=N_PARTS, max_bytes=MAX_BYTES)
-        r = ln.run_extraction_job(spark, pages, out, run_id="b", n_parts=N_PARTS, max_bytes=MAX_BYTES)
+        df = request.getfixturevalue(job.input_fixture)
+        job.run(spark, df, out, run_id="a")
+        r = job.run(spark, df, out, run_id="b")
         assert r["n_rows"] == 0
         assert r["parts_skipped"] == N_PARTS
         # no duplicate manifest rows for a part
@@ -105,35 +147,45 @@ class TestResume:
 
 
 class TestQuarantineReads:
-    def test_zero_quarantine_run_reads_as_empty(self, spark, tmp_path):
+    @pytest.mark.parametrize("job_name", sorted(JOBS))
+    def test_zero_quarantine_run_reads_as_empty(self, spark, tmp_path, job_name):
         # ADVICE r1: a run with zero quarantined rows leaves a quarantine
         # dir with no parquet footers; read_quarantine must not blow up on
         # schema inference — it returns an empty, correctly-typed frame.
         out = str(tmp_path / "out")
-        clean = spark.createDataFrame(
-            [
-                (
-                    f"https://ok.example/{i}",
-                    None,
-                    b"<html><body><main><p>"
-                    b"A clean page with a long paragraph of honest content text."
-                    b"</p></main></body></html>",
-                    "en",
-                )
-                for i in range(6)
-            ],
-            "url string, warc_ts timestamp, html binary, lang string",
-        )
-        r = ln.run_extraction_job(
-            spark, clean, out, run_id="clean-run", n_parts=2, max_bytes=MAX_BYTES
-        )
+        if job_name == "extraction":
+            clean = spark.createDataFrame(
+                [
+                    (
+                        f"https://ok.example/{i}",
+                        None,
+                        b"<html><body><main><p>"
+                        b"A clean page with a long paragraph of honest content text."
+                        b"</p></main></body></html>",
+                        "en",
+                    )
+                    for i in range(6)
+                ],
+                "url string, warc_ts timestamp, html binary, lang string",
+            )
+            column = "error_code"
+        else:
+            clean = spark.createDataFrame(
+                [(i, f"a clean document with plenty of honest words number {i}", "en")
+                 for i in range(6)],
+                "doc_id long, text string, lang string",
+            )
+            column = "reject_reason"
+        job = JOBS[job_name]
+        r = job.run(spark, clean, out, run_id="clean-run", n_parts=2)
         assert r["n_rows"] == 6
-        q = ln.read_quarantine(spark, out)
+        q = job.read_not_ok(spark, out)
         assert q.count() == 0
-        assert "error_code" in q.columns and "part_key" in q.columns
+        assert column in q.columns and "part_key" in q.columns
+        assert q.columns == job.read_ok(spark, out).columns
 
-    def test_missing_quarantine_dir_reads_as_empty(self, spark, tmp_path):
-        q = ln.read_quarantine(spark, str(tmp_path / "never-written"))
+    def test_missing_quarantine_dir_reads_as_empty(self, spark, job, tmp_path):
+        q = job.read_not_ok(spark, str(tmp_path / "never-written"))
         assert q.count() == 0
 
     def test_job_never_materializes(self, spark, pages, tmp_path, monkeypatch):
@@ -154,11 +206,12 @@ class TestQuarantineReads:
         assert r["n_rows"] == pages.count()
         assert ln.read_output(spark, out).count() + ln.read_quarantine(spark, out).count() == r["n_rows"]
 
-    def test_crash_between_data_and_manifest_commits(self, spark, pages, tmp_path, monkeypatch):
+    def test_crash_between_data_and_manifest_commits(self, spark, job, request, tmp_path, monkeypatch):
         # the documented idempotence window: data parquet committed, crash
         # before the manifest append -> the next run reprocesses those parts
         # and dynamic overwrite replaces (never duplicates) their output
         out = str(tmp_path / "out")
+        df = request.getfixturevalue(job.input_fixture)
         import pyspark.sql.readwriter as rw
 
         real_save = rw.DataFrameWriter.parquet
@@ -169,21 +222,17 @@ class TestQuarantineReads:
 
         monkeypatch.setattr(rw.DataFrameWriter, "parquet", boom_on_manifest)
         with pytest.raises(RuntimeError, match="simulated crash"):
-            ln.run_extraction_job(
-                spark, pages, out, run_id="crash", n_parts=N_PARTS, max_bytes=MAX_BYTES
-            )
+            job.run(spark, df, out, run_id="crash")
         monkeypatch.setattr(rw.DataFrameWriter, "parquet", real_save)
         # data landed, manifest did not -> everything still pending
         assert ln.read_manifest(spark, out).count() == 0
-        r = ln.run_extraction_job(
-            spark, pages, out, run_id="retry", n_parts=N_PARTS, max_bytes=MAX_BYTES
-        )
+        r = job.run(spark, df, out, run_id="retry")
         assert r["parts_done"] == N_PARTS and r["parts_skipped"] == 0
-        got = ln.read_output(spark, out).select("url").union(
-            ln.read_quarantine(spark, out).select("url")
+        got = job.read_ok(spark, out).select(job.key).union(
+            job.read_not_ok(spark, out).select(job.key)
         )
-        assert got.count() == pages.count()                 # exactly once
-        assert got.distinct().count() == pages.count()
+        assert got.count() == df.count()                 # exactly once
+        assert got.distinct().count() == df.count()
         # and every persisted row carries the retry run_id (overwritten)
-        runs = {r.run_id for r in ln.read_output(spark, out).select("run_id").distinct().collect()}
+        runs = {r.run_id for r in job.read_ok(spark, out).select("run_id").distinct().collect()}
         assert runs == {"retry"}
