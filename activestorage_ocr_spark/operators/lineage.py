@@ -8,7 +8,8 @@ M4). `commit_parts` is the one commit path; the extraction job here and the
 curation job (`operators/curation.py`) both call it:
 
 * every row is deterministically assigned a ``part_key`` =
-  pmod(xxhash64(key), n_parts) — stable across runs and cluster sizes;
+  pmod(xxhash64(key), n_parts) — stable across runs and cluster sizes, so
+  ``n_parts`` must stay fixed per output root;
 * a run processes only part_keys absent from the manifest (the driver
   holds the completed set, bounded by n_parts, and filters the input to
   ``part_key IN pending`` — the resume primitive), and commits both outcomes
@@ -18,15 +19,21 @@ curation job (`operators/curation.py`) both call it:
   commits reprocesses and overwrites, never duplicates). A single write
   means the rows are computed exactly once and stream into parquet — no
   cache()/count() materialization of the full output before the first byte
-  commits;
+  commits; clustering the write by part_key means one writer task, hence
+  one parquet file, per (outcome, part_key) dir;
 * after the data commit, one manifest row per completed part_key records the
   lineage metrics (rows in/ok/quarantined, bytes in, chars out, wall ms) —
   the structured-log analog of the reference's per-request line
   (`rust/src/server.rs:270-277`).
 
+The commit adds few Spark jobs of its own: no job reads a manifest that does
+not exist yet, AQE sizes the write exchange, and the manifest read-back
+reuses the schema the write just used (no inference job).
+
 Exactly-once contract: after any crash/resume sequence, output contains every
 input key exactly once (tests/test_resume.py kills between commits to prove
-it, for both jobs).
+it, for both jobs), provided every run against one output root uses the
+same ``n_parts``.
 """
 
 from __future__ import annotations
@@ -95,6 +102,14 @@ def commit_parts(
     used by tests to simulate a crash after a partial commit, and by
     operators to drain a backlog incrementally.
 
+    ``n_parts`` must stay fixed per output root: a key hashes to a
+    different part under another ``n_parts``, so a resume with a changed
+    value would commit keys a second time. A manifest holding a part_key
+    ``>= n_parts`` raises ``ValueError`` before anything is written. Any
+    other change goes undetected — a larger ``n_parts``, or a smaller one
+    above every committed part_key — since the manifest does not record
+    ``n_parts``: a known gap.
+
     Returns the summary {run_id, parts_done, parts_skipped, n_rows} and the
     number of committed ``outcomes[0]`` rows.
     """
@@ -106,8 +121,17 @@ def commit_parts(
     # not in the manifest is pending (parts with no input rows are harmless
     # in the pruning list — they just produce no manifest rows). The only
     # input touch before the write is a limit(1) emptiness probe on the keyed
-    # input, which stops at the first pending row (key column only).
-    done_set = {r.part_key for r in completed_parts(spark, out_dir).collect()}
+    # input, which stops at the first pending row (key column only). A fresh
+    # root has no manifest: no Spark job runs to learn that.
+    done_set = set()
+    if os.path.exists(manifest_path(out_dir)):
+        done_set = {r.part_key for r in completed_parts(spark, out_dir).collect()}
+    if done_set and max(done_set) >= n_parts:
+        raise ValueError(
+            f"manifest of {out_dir} holds part_key {max(done_set)}, which needs "
+            f"n_parts > {max(done_set)}; this run has n_parts={n_parts}. "
+            "n_parts must stay fixed per output root"
+        )
     pending_parts = sorted(set(range(n_parts)) - done_set)
     if only_parts is not None:
         pending_parts = sorted(set(pending_parts) & {int(p) for p in only_parts})
@@ -129,10 +153,18 @@ def commit_parts(
     )
     # Write-layout exchange: without it every task fans out into ~all
     # part_key dirs (tasks x parts tiny files — measured 8k files and
-    # 60s of footer overhead at 100k docs). Clustering by part_key means
-    # each partition dir is written by exactly ONE task: n_parts*2 files
-    # total, and the exchange carries the output rows, not the raw input.
-    clustered = stamped.repartition(n_parts, F.col("part_key"))
+    # 60s of footer overhead at 100k docs). Hash-clustering by part_key
+    # sends each part_key to exactly ONE task, so each (outcome, part_key)
+    # dir is written by one task (one file per non-empty dir), and the
+    # exchange carries the output rows, not the raw input. No partition
+    # count: AQE sizes the stage from shuffle.partitions, as in
+    # `extract_pages` (a fixed n_parts ran 64 write tasks on 4 cores).
+    # Fusing this exchange with the extraction exchange (pass 1 ->
+    # repartition(64, part_key) -> pass 2 -> write) was measured and
+    # rejected: the write went 1.7 -> 3.4 s at 4 cores (crawl_mix), since
+    # pass 2 then runs in 64 Python tasks and murmur3 collisions bunch the
+    # giants into a few of them.
+    clustered = stamped.repartition(F.col("part_key"))
     # idempotent per-part data commit: dynamic overwrite replaces only the
     # touched partitions, set per write so the session conf is never changed
     (
@@ -145,9 +177,11 @@ def commit_parts(
     # Manifest commit happens only after the data commit succeeded, derived
     # from the just-committed parquet: partition-pruned to this run's
     # part_keys, column-pruned to the metric columns — never a recomputation
-    # and never a full-output scan.
+    # and never a full-output scan. Read with the schema just written: no
+    # schema-inference job.
     committed = (
-        spark.read.parquet(os.path.join(out_dir, "data"))
+        spark.read.schema(clustered.schema)
+        .parquet(os.path.join(out_dir, "data"))
         .filter(F.col("part_key").isin(pending_parts))
         .filter(F.col("run_id") == run_id)
     )

@@ -11,7 +11,11 @@ tests/bench so measured plans match shipped plans:
 * session timezone pinned UTC (DuckDB oracle comparison; pyspark guide
   pitfall);
 * shuffle partitions sized to cores for local runs — on a real cluster this
-  is set to ~2-3x total cores via spark-submit conf.
+  is set to ~2-3x total cores via spark-submit conf;
+* parallel partition-discovery listing sized to cores for local runs too:
+  a read of more than 32 partition dirs (a committed ``data/`` tree) lists
+  them in a Spark job of that many tasks, which Spark caps only at 10000 —
+  on a cluster the default stands.
 """
 
 from __future__ import annotations
@@ -40,11 +44,10 @@ def build_session(
     if _PKG_ROOT not in pypath.split(os.pathsep):
         os.environ["PYTHONPATH"] = f"{_PKG_ROOT}{os.pathsep}{pypath}" if pypath else _PKG_ROOT
 
+    # local[N] -> N; local[*] / cluster -> 0 (leave to AQE and Spark defaults)
+    local_cores = int(master[6:-1]) if master.startswith("local[") and master[6:-1].isdigit() else 0
     if shuffle_partitions is None:
-        # local[N] -> N; local[*] / cluster -> leave for AQE to coalesce
-        shuffle_partitions = 0
-        if master.startswith("local[") and master[6:-1].isdigit():
-            shuffle_partitions = int(master[6:-1])
+        shuffle_partitions = local_cores
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -65,6 +68,8 @@ def build_session(
     )
     if shuffle_partitions:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    if local_cores:
+        b = b.config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(local_cores))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

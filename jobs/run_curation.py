@@ -36,7 +36,12 @@ def main() -> None:
     ap.add_argument("--input", required=True, help="documents table (parquet dir)")
     ap.add_argument("--output", required=True, help="output root (data/outcome={curated,rejected}/, _manifest/)")
     ap.add_argument("--run-id", required=True)
-    ap.add_argument("--n-parts", type=int, default=1024, help="stable id-hash checkpoint partitions")
+    ap.add_argument(
+        "--n-parts", type=int, default=1024,
+        help="stable id-hash checkpoint partitions; keep it the same for every "
+        "run against one --output (a value at or below a committed part key "
+        "is refused; other changes, such as a larger value, are not detected)",
+    )
     ap.add_argument("--id-col", default="doc_id")
     ap.add_argument("--text-col", default="text")
     ap.add_argument("--min-tokens", type=int, default=None)

@@ -40,7 +40,12 @@ def main() -> None:
     )
     ap.add_argument("--output", required=True, help="output root (data/outcome={extracted,quarantine}/, _manifest/)")
     ap.add_argument("--run-id", required=True)
-    ap.add_argument("--n-parts", type=int, default=1024, help="stable url-hash checkpoint partitions")
+    ap.add_argument(
+        "--n-parts", type=int, default=1024,
+        help="stable url-hash checkpoint partitions; keep it the same for every "
+        "run against one --output (a value at or below a committed part key "
+        "is refused; other changes, such as a larger value, are not detected)",
+    )
     # unset flags fall back to env config (ASOS_OCR_*, engine/config.py)
     ap.add_argument("--engine", default=None, choices=["pixelocr", "pixelocr-alt"])
     ap.add_argument("--preset", default=None, choices=["none", "minimal", "default", "aggressive"])

@@ -2,6 +2,8 @@
 equals a single-run golden, exactly once per url (SURVEY.md §5.2). The
 commit-path tests run both jobs that commit through `lineage.commit_parts`."""
 
+import glob
+import os
 from typing import Callable, NamedTuple
 
 import pyspark.sql.functions as F
@@ -145,6 +147,21 @@ class TestResume:
         assert tot.b > 0
         assert m.filter(F.col("wall_ms") < 0).count() == 0
 
+    def test_resume_with_smaller_n_parts_raises(self, spark, pages, tmp_path):
+        # a url in part 5 of 8 hashes to some part of 4: a resume with
+        # n_parts=4 would commit it a second time beside part_key=5
+        out = str(tmp_path / "out")
+        ln.run_extraction_job(
+            spark, pages, out, run_id="p", n_parts=8, max_bytes=MAX_BYTES, only_parts=[5],
+        )
+        with pytest.raises(ValueError, match="n_parts must stay fixed"):
+            ln.run_extraction_job(spark, pages, out, run_id="q", n_parts=4, max_bytes=MAX_BYTES)
+        assert [r.part_key for r in ln.read_manifest(spark, out).collect()] == [5]
+        got = ln.read_output(spark, out).select("url").union(
+            ln.read_quarantine(spark, out).select("url")
+        )
+        assert got.count() == got.distinct().count()
+
 
 class TestQuarantineReads:
     @pytest.mark.parametrize("job_name", sorted(JOBS))
@@ -192,7 +209,9 @@ class TestQuarantineReads:
         # Verdict r2 "what's wrong #1": the job must stream kernel->parquet —
         # never cache()/persist() the full extraction before the first write.
         # Patch both entry points to raise; the job must still complete.
-        from pyspark.sql import DataFrame
+        # The concrete class: a patch on pyspark.sql.DataFrame does not reach
+        # the methods its session-specific subclass overrides.
+        DataFrame = type(pages)
 
         def _boom(self, *a, **k):  # pragma: no cover - should never run
             raise AssertionError("run_extraction_job must not materialize output")
@@ -236,3 +255,58 @@ class TestQuarantineReads:
         # and every persisted row carries the retry run_id (overwritten)
         runs = {r.run_id for r in job.read_ok(spark, out).select("run_id").distinct().collect()}
         assert runs == {"retry"}
+
+
+class TestCommitLayout:
+    def test_one_parquet_file_per_partition_dir(self, spark, job, request, tmp_path):
+        # the write clusters by part_key, so each (outcome, part_key) dir is
+        # written by one task: exactly one parquet file per dir
+        out = str(tmp_path / "out")
+        job.run(spark, request.getfixturevalue(job.input_fixture), out, run_id="layout")
+        dirs = glob.glob(os.path.join(out, "data", "outcome=*", "part_key=*"))
+        assert dirs
+        counts = {d: sum(f.endswith(".parquet") for f in os.listdir(d)) for d in dirs}
+        assert set(counts.values()) == {1}, counts
+
+
+class TestCommitCost:
+    #: a fresh-root extraction commit of the 200-doc corpus at local[4] runs
+    #: 18 tasks; a fixed 64-task write stage or a 63-task partition-discovery
+    #: listing job would each push it past this bound
+    MAX_TASKS = 32
+
+    def test_fresh_root_commit_task_count(self, spark, pages, tmp_path, monkeypatch):
+        # the concrete class: a patch on pyspark.sql.DataFrame does not reach
+        # the methods its session-specific subclass overrides
+        DataFrame = type(pages)
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        group = f"commit-cost-{tmp_path.name}"
+        jobs_before_probe = []
+        real_take = DataFrame.take
+
+        def take(self, num):
+            if not jobs_before_probe:
+                jobs_before_probe.append(len(tracker.getJobIdsForGroup(group)))
+            return real_take(self, num)
+
+        monkeypatch.setattr(DataFrame, "take", take)
+        sc.setJobGroup(group, "fresh-root commit")
+        try:
+            r = ln.run_extraction_job(
+                spark, pages, str(tmp_path / "out"), run_id="cost", max_bytes=MAX_BYTES,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert r["n_rows"] == 200
+        # a fresh root has no manifest: the emptiness probe is the first job
+        assert jobs_before_probe == [0]
+        tasks = 0
+        for job_id in tracker.getJobIdsForGroup(group):
+            for stage_id in tracker.getJobInfo(job_id).stageIds:
+                # the status store evicts skipped stages (no completion time,
+                # no tasks run) first once it holds spark.ui.retainedStages
+                info = tracker.getStageInfo(stage_id)
+                tasks += info.numCompletedTasks if info else 0
+        assert 0 < tasks <= self.MAX_TASKS
