@@ -7,8 +7,8 @@ Scale notes (the point of each design):
 
 * exact: one hash-groupBy — a single shuffle on an md5 key, near-uniform by
   construction (no skew).
-* MinHash+LSH: signatures are per-doc aggregates over exploded shingles
-  (map-side combinable); candidate generation joins docs only within an LSH
+* MinHash+LSH: signatures are per-doc minima over each doc's shingle array
+  (map-only); candidate generation joins docs only within an LSH
   band bucket, so the pair blow-up is bounded by bucket sizes rather than
   O(n^2). At 10^12 docs the band join is the only shuffle that matters; the
   bucket key is an md5 so it hash-partitions evenly, and giant buckets (all
@@ -16,7 +16,11 @@ Scale notes (the point of each design):
 * SimHash: a fixed-width bit signature per doc; banding the bit-string prefix
   gives the same bounded-join property.
 * n-gram Jaccard: exact pairwise verification — used downstream of a
-  candidate generator, never standalone at scale.
+  candidate generator, never standalone at scale. Each candidate pair is
+  joined to both documents' shingle arrays and intersected map-side: no
+  shingle explode, no aggregation, nothing persisted.
+* clusters: label propagation over the verified pairs, whose edge list is
+  built in one pass over them, cached for the rounds and released on return.
 """
 
 from __future__ import annotations
@@ -266,62 +270,39 @@ def ngram_jaccard_pairs(
     candidates: DataFrame,
 ) -> DataFrame:
     """Exact Jaccard over distinct k-word shingles, RESTRICTED to a
-    ``candidates`` frame of (id_a, id_b) pairs — normally the output of
-    `lsh_candidate_pairs`. The bound is part of the API on purpose
+    ``candidates`` frame of DISTINCT (id_a, id_b) pairs — normally the
+    output of `lsh_candidate_pairs`. The bound is part of the API on purpose
     (VERDICT r1): an unbounded shingle self-join makes any shingle shared
     by m documents produce m^2/2 join rows — one boilerplate shingle at
     crawl scale is a cartesian bomb. With the bound, cost is
     O(|candidates| * shingles-per-doc) regardless of shingle hotness.
 
-    Jaccard = |A∩B| / (|A| + |B| - |A∩B|); the intersection count comes from
-    joining each candidate pair's a-side shingles to the b-side on
-    (id_b, shingle); set sizes from a per-doc aggregate broadcast back in.
-    Candidate pairs sharing zero shingles drop out (jaccard 0 < threshold).
-    Returns (id_a, id_b, jaccard rounded to 9).
-
-    r7 (guide §2.4): the candidate pair list and the CANDIDATE-FILTERED
-    shingle table are persisted — the old plan re-evaluated the corpus-wide
-    shingle explode three times (sizes, a-side, b-side) and the candidate
-    generator's bucket join three more (two id projections + the
-    intersection join). Every use of the shingles is candidate-bounded
-    (sizes semi-joins, a/b sides inner-join the pair list), so the persisted
-    relation scales with |candidates| x shingles-per-doc, not the corpus."""
-    cand = candidates.select("id_a", "id_b").persist(StorageLevel.MEMORY_AND_DISK)
-    sh = exploded_shingles(df, id_col, text_col, k)
-    # set sizes only for documents that appear in a candidate pair — the
-    # full per-doc size table would be corpus-sized at crawl scale
-    cand_ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .union(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    sh_cand = sh.join(cand_ids, id_col, "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sizes = (
-        sh_cand.groupBy(id_col)
-        .agg(F.count("*").cast("long").alias("n_shingles"))
-    )
-    sh_a = sh_cand.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = sh_cand.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        cand
-        .join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").cast("long").alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("n_b"))
-    jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-    # no forced broadcast: the size table scales with |candidates|, so let
-    # AQE pick broadcast vs shuffle join from the measured size
+    Jaccard = |A∩B| / (|A| + |B| - |A∩B|), computed MAP-SIDE from arrays:
+    each candidate pair is joined to both documents' `word_shingles` arrays
+    (already distinct), so |A∩B| is the size of their ``array_intersect`` —
+    the same array idiom as `minhash_signature`. No shingle explode, no
+    per-doc size aggregate, no intersection groupBy, no persist: the plan is
+    two equi-joins and a projection, and the data moved is still
+    |candidates| x shingles-per-doc. Candidate pairs sharing no shingle
+    drop out at any threshold, 0.0 included (as in the exploded-join form
+    this replaced and in the oracle); ids absent from ``df`` drop out too.
+    Candidates must be distinct pairs: a repeated pair yields a repeated
+    row (the exploded-join form double-counted its intersection). Returns
+    (id_a, id_b, jaccard rounded to 9)."""
+    sh = df.select(F.col(id_col), word_shingles(F.col(text_col), k).alias("sh"))
+    sh_a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    sh_b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    n_inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = n_inter / (F.size("sh_a") + F.size("sh_b") - n_inter)
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", F.round(jac, 9))
+        candidates.select("id_a", "id_b")
+        .join(sh_a, "id_a")
+        .join(sh_b, "id_b")
+        # pairs sharing no shingle drop out at any threshold; a null text
+        # shingles to [null], which overlaps nothing
+        .filter(F.arrays_overlap("sh_a", "sh_b"))
+        .select("id_a", "id_b", F.round(jac, 9).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -354,38 +335,38 @@ def connected_components(
     backstop (diameter 50 needs a 50-hop near-dup chain); hitting it raises
     rather than returning silently-wrong labels.
     """
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        # the pair graph is referenced once per iteration: materialize it so
-        # the (expensive) upstream candidate/verify pipeline runs exactly
-        # once, not once per iteration — the standard iterative-algorithm
-        # cache
-        .cache()
+    # both directions of every pair from ONE pass over ``pairs`` (a union of
+    # two projections would run the verify pipeline twice to fill the
+    # cache); cached because every round reads it, released before return
+    both = F.array(
+        F.struct(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
+        F.struct(F.col(b_col).alias("src"), F.col(a_col).alias("dst")),
     )
+    edges = pairs.select(F.explode(both).alias("e")).select("e.src", "e.dst").cache()
     labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("comp"))
-    for i in range(max_iters):
-        nbr = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_min"))
-        )
-        stepped = labels.join(nbr, labels.id == nbr.src, "left").select(
-            F.col("id"),
-            F.col("comp").alias("prev_comp"),
-            F.least(F.col("comp"), F.coalesce(F.col("nbr_min"), F.col("comp"))).alias(
-                "comp"
-            ),
-        )
-        stepped = stepped.localCheckpoint(eager=True)
-        changed = stepped.filter(F.col("comp") != F.col("prev_comp")).limit(1).count()
-        labels = stepped.select("id", "comp")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} iterations"
-        )
+    try:
+        for i in range(max_iters):
+            nbr = (
+                edges.join(labels, edges.dst == labels.id)
+                .groupBy("src")
+                .agg(F.min("comp").alias("nbr_min"))
+            )
+            stepped = labels.join(nbr, labels.id == nbr.src, "left").select(
+                F.col("id"),
+                F.col("comp").alias("prev_comp"),
+                F.least(F.col("comp"), F.coalesce(F.col("nbr_min"), F.col("comp"))).alias(
+                    "comp"
+                ),
+            )
+            stepped = stepped.localCheckpoint(eager=True)
+            changed = stepped.filter(F.col("comp") != F.col("prev_comp")).limit(1).count()
+            labels = stepped.select("id", "comp")
+            if changed == 0:
+                break
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iters} iterations"
+            )
+    finally:
+        edges.unpersist()
     return labels.select(F.col("id").alias(id_col), F.col("comp").alias("cluster_id"))

@@ -28,7 +28,10 @@ curation job (`operators/curation.py`) both call it:
 
 The commit adds few Spark jobs of its own: no job reads a manifest that does
 not exist yet, AQE sizes the write exchange, and the manifest read-back
-reuses the schema the write just used (no inference job).
+reuses the schema the write just used (no inference job). Whether the
+manifest or the data exists is asked of Hadoop's FileSystem, as Spark
+reads and writes them, so a ``file://``, ``s3a://`` or ``hdfs://`` root
+resumes like a plain path.
 
 Exactly-once contract: after any crash/resume sequence, output contains every
 input key exactly once (tests/test_resume.py kills between commits to prove
@@ -62,9 +65,18 @@ def manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest")
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop FileSystem its scheme
+    names (a plain path, ``file://``, ``s3a://``, ``hdfs://``) — the one
+    Spark reads and writes it with. A driver-side call: no Spark job."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()).exists(p)
+
+
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     p = manifest_path(out_dir)
-    if os.path.exists(p):
+    if _path_exists(spark, p):
         return spark.read.parquet(p)
     return spark.createDataFrame([], MANIFEST_SCHEMA)
 
@@ -124,7 +136,7 @@ def commit_parts(
     # input, which stops at the first pending row (key column only). A fresh
     # root has no manifest: no Spark job runs to learn that.
     done_set = set()
-    if os.path.exists(manifest_path(out_dir)):
+    if _path_exists(spark, manifest_path(out_dir)):
         done_set = {r.part_key for r in completed_parts(spark, out_dir).collect()}
     if done_set and max(done_set) >= n_parts:
         raise ValueError(
@@ -224,7 +236,7 @@ def read_outcome(spark: SparkSession, out_dir: str, outcome: str) -> DataFrame:
     no columns.
     """
     p = os.path.join(out_dir, "data")
-    if not os.path.exists(p):
+    if not _path_exists(spark, p):
         return spark.createDataFrame([], StructType([]))
     return spark.read.parquet(p).filter(F.col("outcome") == outcome).drop("outcome")
 

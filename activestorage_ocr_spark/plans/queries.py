@@ -858,8 +858,9 @@ def q_dedup_simhash_pairs(spark, sf_dir):
 
 def q_dedup_jaccard_pairs(spark, sf_dir):
     """Composed LSH -> exact-Jaccard verification (the full fuzzy-dedup
-    pipeline): candidates from the banded bucket join, verified by the
-    candidate-bounded shingle-intersection join. No shingle self-join."""
+    pipeline): candidates from the banded bucket join, each verified by
+    intersecting the two documents' shingle arrays map-side. No shingle
+    self-join."""
     docs = _docs_with_neardups(spark, sf_dir)
     cand = dd.lsh_candidate_pairs(docs, "doc_id", "text", k=3, n_hashes=4, bands=2)
     return dd.ngram_jaccard_pairs(

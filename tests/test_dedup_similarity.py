@@ -1,6 +1,8 @@
 """Unit tests: dedup operators (exact / MinHash+LSH / SimHash / Jaccard) and
 similarity search (brute-force + LSH-bucketed) on controlled fixtures."""
 
+import contextlib
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -141,6 +143,87 @@ class TestJaccard:
         plan = verified._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
+
+
+def _exploded_join_jaccard(df, id_col, text_col, k, threshold, candidates):
+    """The exploded-shingle-join form `ngram_jaccard_pairs` replaced, kept as
+    the reference: |A∩B| counts the a-side shingle rows that join the b-side
+    on (id_b, shingle), set sizes come from a per-doc row count. Its
+    persists and the candidate-id semi-join are left out: they changed the
+    plan, not the values."""
+    sh = dd.exploded_shingles(df, id_col, text_col, k)
+    sizes = sh.groupBy(id_col).agg(F.count("*").cast("long").alias("n_shingles"))
+    inter = (
+        candidates.select("id_a", "id_b")
+        .join(sh.select(F.col(id_col).alias("id_a"), "shingle"), "id_a")
+        .join(sh.select(F.col(id_col).alias("id_b"), "shingle"), ["id_b", "shingle"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").cast("long").alias("n_inter"))
+    )
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("n_b"))
+    jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+    return (
+        inter.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("jaccard", F.round(jac, 9))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+class TestJaccardArrayForm:
+    """`ngram_jaccard_pairs` (array intersection) against the exploded-join
+    form it replaced, on the edge cases of shingling."""
+
+    ROWS = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy dog"),  # exact dup of 1
+        (3, "the quick brown fox jumps over a lazy cat"),
+        (4, None),
+        (5, None),
+        (6, ""),
+        (7, ""),
+        (8, "two words"),  # fewer than k words: one shingle, the whole text
+        (9, "two words"),
+        (10, "a b a b a b a b"),  # repeated shingles
+        (11, "a b a b a c"),
+        (12, "   "),
+    ]
+    MISSING = (99, 100)  # candidate ids absent from the docs
+
+    @pytest.fixture(scope="class")
+    def frames(self, spark):
+        docs = spark.createDataFrame(self.ROWS, "doc_id long, text string")
+        ids = [r[0] for r in self.ROWS] + list(self.MISSING)
+        cand = spark.createDataFrame(
+            [(a, b) for a in ids for b in ids if a < b], "id_a long, id_b long"
+        )
+        return docs, cand
+
+    @pytest.mark.parametrize("threshold", [0.0, 0.3, 0.5, 1.0])
+    def test_matches_exploded_join_form(self, frames, threshold):
+        docs, cand = frames
+        new = dd.ngram_jaccard_pairs(
+            docs, "doc_id", "text", k=3, threshold=threshold, candidates=cand
+        ).collect()
+        old = _exploded_join_jaccard(docs, "doc_id", "text", 3, threshold, cand).collect()
+        assert sorted(map(tuple, new)) == sorted(map(tuple, old))
+        assert new  # the exact duplicates pass every threshold
+
+    def test_no_shared_shingle_never_appears(self, frames):
+        docs, cand = frames
+        out = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in dd.ngram_jaccard_pairs(
+                docs, "doc_id", "text", k=3, threshold=0.0, candidates=cand
+            ).collect()
+        }
+        assert all(v > 0 for v in out.values()), out
+        assert (4, 5) not in out  # two null texts share nothing
+        assert (1, 8) not in out
+        assert not {a for pair in out for a in pair} & set(self.MISSING)
+        assert out[(1, 2)] == out[(8, 9)] == out[(6, 7)] == 1.0
 
 
 @pytest.fixture(scope="module")
@@ -371,6 +454,55 @@ class TestRound3PlanShapes:
         nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
         with pytest.raises(RuntimeError, match="converge"):
             dd.connected_components(nodes, pairs, max_iters=2)
+
+    def test_jaccard_verify_is_array_form(self, docs, spark):
+        # the verify step joins each pair to two shingle arrays: no shingle
+        # explode (Generate) and nothing persisted (InMemoryTableScan)
+        cand = spark.createDataFrame([(1, 2), (1, 3), (4, 5)], "id_a long, id_b long")
+        out = dd.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.3, candidates=cand)
+        assert {(r.id_a, r.id_b) for r in out.collect()} == {(1, 2), (1, 3)}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan, plan
+        assert "Generate" not in plan, plan
+
+    def test_connected_components_plans_pairs_once(self, spark, monkeypatch):
+        # the cached edge list reads its pair input in ONE pass: a union of
+        # two projections ran the whole upstream verify pipeline twice
+        pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
+        nodes = spark.createDataFrame([(i,) for i in range(1, 13)], "doc_id long")
+        cached = []
+        real_cache = type(pairs).cache
+
+        def recording_cache(self):
+            cached.append(self)
+            return real_cache(self)
+
+        monkeypatch.setattr(type(pairs), "cache", recording_cache)
+        dd.connected_components(nodes, pairs).collect()
+        assert len(cached) == 1
+        plan = cached[0]._jdf.queryExecution().executedPlan().toString()
+        # createDataFrame from a list plans as one `Scan ExistingRDD` leaf
+        assert plan.count("Scan ExistingRDD") == 1, plan
+
+    @pytest.mark.parametrize("max_iters", [50, 1])
+    def test_connected_components_releases_edge_cache(self, spark, max_iters):
+        # the cached edge list is released on return and on the backstop
+        # raise; what stays cached are the localCheckpointed label tables
+        jsc = spark.sparkContext._jsc
+        before = {i.id() for i in jsc.sc().getRDDStorageInfo()}
+        pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+        nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
+        backstop = (
+            pytest.raises(RuntimeError, match="converge")
+            if max_iters == 1 else contextlib.nullcontext()
+        )
+        with backstop:
+            dd.connected_components(nodes, pairs, max_iters=max_iters).collect()
+        persistent = jsc.getPersistentRDDs()
+        added = [i.id() for i in jsc.sc().getRDDStorageInfo() if i.id() not in before]
+        assert added  # the label checkpoints
+        left = [i for i in added if not persistent[i].rdd().isLocallyCheckpointed()]
+        assert not left, [persistent[i].name() for i in left]
 
     def test_stratified_sample_is_map_only(self, spark):
         # r4: deterministic hash-stratified sampling must be pure map-side —

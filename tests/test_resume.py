@@ -162,6 +162,23 @@ class TestResume:
         )
         assert got.count() == got.distinct().count()
 
+    def test_uri_root_resumes(self, spark, job, request, tmp_path):
+        # a file:// root must resume like the same root given as a path:
+        # the manifest and data dirs are looked up through Hadoop, not os.path
+        plain = str(tmp_path / "out")
+        uri = f"file://{plain}"
+        df = request.getfixturevalue(job.input_fixture)
+        job.run(spark, df, uri, run_id="p", only_parts=[1, 2])
+        r = job.run(spark, df, uri, run_id="q")
+        assert r["parts_skipped"] == 2
+        assert r["parts_done"] == N_PARTS - 2
+        assert ln.read_manifest(spark, uri).count() == N_PARTS
+        for read in (job.read_ok, job.read_not_ok):
+            want = read(spark, plain)
+            got = read(spark, uri)
+            assert got.columns == want.columns
+            assert got.count() == want.count() > 0
+
 
 class TestQuarantineReads:
     @pytest.mark.parametrize("job_name", sorted(JOBS))
